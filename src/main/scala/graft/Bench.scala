@@ -1,22 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // lz4 the RDD block store: the graph family's DISK_ONLY edge
-      // blocks (duplicate-heavy node-id pairs) compress ~3×, which is
-      // the difference between the sf10 iteration state fitting local
-      // disk and overflowing it; negligible cost elsewhere (shuffle
-      // blocks are compressed by default already)
-      .config("spark.rdd.compress", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     // JIT/codegen + parquet reader/writer warm-up so the first measured
     // query doesn't absorb JVM startup; touches no benchmark data.
     spark.range(1000000).selectExpr("sum(id)").collect()

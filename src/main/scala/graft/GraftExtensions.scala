@@ -9,7 +9,8 @@ import graft.functions.{DotProduct, NfcNormalize, SpaceSaving}
 /** SparkSessionExtensions entry point: makes the engine's custom Catalyst
   * expressions available to plain SQL. Activate on any cluster with
   *   spark.sql.extensions=graft.GraftExtensions
-  * or SparkSession.builder().withExtensions(new GraftExtensions). For an
+  * or a builder's `.withExtensions(new GraftExtensions)` (as
+  * [[GraftSession.build]] does). For an
   * already-running session, `GraftSqlBridge.registerFunction` does the
   * same registration directly.
   */

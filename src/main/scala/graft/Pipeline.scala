@@ -796,14 +796,7 @@ object Pipeline {
     val pos = args.filterNot(_ == "multimodal")
     val sfDir = pos.headOption.getOrElse("/root/testdata/sf0.001")
     val out = pos.drop(1).headOption.filter(_ != "-")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions).master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.rdd.compress", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     val rates = Map("src1" -> 1.0, "src2" -> 1.0, "src3" -> 0.5,
       "src5" -> 0.8, "src7" -> 1.0, "src11" -> 0.25)
     // the production profile turns the round-9 signals ON — cut the

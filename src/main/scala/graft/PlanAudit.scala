@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump formatted physical plans for the audit-worthy queries: verifies
   * PushedFilters reach the scans, ReadSchema is pruned, dims broadcast,
   * and WholeStageCodegen spans the hot path. */
@@ -11,22 +9,11 @@ object PlanAudit {
     val names = if (args.length > 1) args(1).split(",").toSet
       else Set("q01_avg_value_by_user", "q11_star_revenue", "q12_semi_join",
         "q15_window_running", "q25_knn_cosine", "q32_clean_filter_chain")
-    // the bench session installs GraftExtensions (RewriteRowNumberTopK /
-    // TopKPerGroup) — audit the plans the bench actually runs
-    val builder = SparkSession.builder().withExtensions(new GraftExtensions)
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-    // ad-hoc conf for before/after plan dumps (same contract as
-    // JobProbe's GRAFT_PROBE_CONF): GRAFT_PLAN_CONF="k=v;k2=v2"
-    sys.env.get("GRAFT_PLAN_CONF").foreach(_.split(";").map(_.trim)
-      .filter(_.nonEmpty).foreach { kv =>
-        require(kv.contains("="), s"bad GRAFT_PLAN_CONF segment (want k=v): '$kv'")
-        val Array(k, v) = kv.split("=", 2); builder.config(k, v)
-      })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the session Bench times, so the audited plans are the benchmarked
+    // ones; ad-hoc conf for before/after plan dumps goes through
+    // GraftSession.envConf: GRAFT_PLAN_CONF="k=v;k2=v2"
+    val spark = GraftSession.build(
+      conf = GraftSession.envConf("GRAFT_PLAN_CONF"))
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       if (names.contains(name)) {
         println(s"\n========== $name ==========")

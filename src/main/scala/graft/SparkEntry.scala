@@ -2411,8 +2411,8 @@ object SparkEntry {
 
   /** Sorted-neighborhood near-dup blocking (the entity-resolution
     * classic, a THIRD candidate generator next to LSH banding and the
-    * prefix filter): sort fingerprints within top-byte buckets, compare
-    * each doc to its next 3 neighbors in sort order via lead windows,
+    * shingle postings join): sort fingerprints within top-byte buckets,
+    * compare each doc to its next 3 neighbors in sort order via lead windows,
     * keep Hamming ≤ 3. Bucketed so the sort parallelizes (pairs
     * crossing a bucket boundary are the standard single-pass SNM miss —
     * production runs multiple sort keys); window input is |docs| rows
@@ -2858,13 +2858,10 @@ object SparkEntry {
   private val SplitTrainBp = 8000
   private val SplitValBp = 9000
 
-  /** DSIR hashed-feature model shape (shared with the oracle AND with
-    * tools.StreamStoreBench's q190 runner — `private[graft]` so the
-    * bench measures THE gate's configuration, not a hardcoded copy that
-    * silently drifts when these are retuned). */
-  private[graft] val DsirBuckets = 256
-  private[graft] val DsirSalt = "dsir-v1"
-  private[graft] val DsirTargetSource = "src3"
+  /** DSIR hashed-feature model shape (shared with the oracle). */
+  private val DsirBuckets = 256
+  private val DsirSalt = "dsir-v1"
+  private val DsirTargetSource = "src3"
 
   /** Token-budget allocation knobs (shared with the oracle): budget =
     * Σtokens DIV den, repeat ceiling in epochs. */

@@ -666,12 +666,11 @@ object NearDup {
     * join (both the intersection AND the denominator count only banded
     * shingles, keeping the ratio's numerator ⊆ denominator). */
   def containmentPairs(docs: DataFrame, minContainment: Double,
-                       maxShingleDf: Long,
-                       prefixFilter: Boolean = false): DataFrame = {
+                       maxShingleDf: Long): DataFrame = {
     val sh = Shingles.table(docs, None)
     val dfs = sh.groupBy(col("shingle")).agg(count(lit(1)).as("__df"))
     containmentFromBand(sh, dfs.filter(col("__df") <= maxShingleDf),
-      minContainment, prefixFilter)
+      minContainment)
   }
 
   /** [[containmentPairs]] with the CORPUS-RELATIVE df band: instead of
@@ -709,12 +708,11 @@ object NearDup {
     * the whole computation one declarative plan (no driver collect). */
   def containmentPairsQuantileBand(docs: DataFrame, minContainment: Double,
                                    quantileBp: Int, dfFloor: Long,
-                                   fanoutBudget: Long,
-                                   prefixFilter: Boolean = false): DataFrame = {
+                                   fanoutBudget: Long): DataFrame = {
     val sh = Shingles.table(docs, None)
     containmentFromBand(sh,
       bandedShingleDfs(sh, quantileBp, dfFloor, fanoutBudget),
-      minContainment, prefixFilter)
+      minContainment)
   }
 
   /** The in-band (shingle, df) table the quantile-band containment
@@ -819,13 +817,11 @@ object NearDup {
   }
 
   private def containmentFromBand(sh: DataFrame, bandedDfs: DataFrame,
-                                  minContainment: Double,
-                                  prefixFilter: Boolean): DataFrame = {
+                                  minContainment: Double): DataFrame = {
     require(minContainment > 0 && minContainment <= 1,
       "minContainment must be in (0, 1]")
-    // postings carry their shingle's df (needed for the rarest-first
-    // prefix order); shared: referenced by sizes, prefix, candidate
-    // probe and both verify sides
+    // postings carry their shingle's df; shared: referenced by sizes
+    // and both sides of the postings self-join
     val banded = Shingles.shared(sh.join(bandedDfs, Seq("shingle")))
     val sizes = banded.groupBy(col("doc_id")).agg(count(lit(1)).as("n_a"))
 
@@ -835,67 +831,16 @@ object NearDup {
     // bulk of the postings)
     val joinable = banded.filter(col("__df") >= 2)
 
-    // Two exact plans for the intersection counts, chosen by the
-    // caller's knowledge of the df distribution:
-    //
-    //  - prefixFilter = false (default): straight postings self-join,
-    //    Σ_s df(s)² candidate rows. Cheapest when df is near-uniform
-    //    and small (the banded synthetic fixture: 2.5 s vs 8 s at
-    //    sf0.1 — the prefix machinery's verify fan-out Σ_cand·|S(a)|
-    //    EXCEEDS Σ df² there). MEASURED RULE (round 10, sf10 under the
-    //    corpus-relative band): postings 20.5 s vs prefix 490.7 s —
-    //    the fan-out-budget band already bounds the postings join at
-    //    ≤ ShingleDfFanoutBudget candidates BY CONSTRUCTION, and the
-    //    saturation regime's df is uniformly high, so rarest-first
-    //    prefixes have no rare shingles to exploit while their verify
-    //    walk pays Σ_cand·|S(a)| on ~10⁸ candidates. Under the banded
-    //    entry points, postings is the right default at ANY corpus;
-    //    prefixFilter remains for RAW-df (unbanded) skewed callers.
-    //  - prefixFilter = true: PPJoin-family candidate generation for
-    //    df-SKEWED corpora where Σ df² explodes. If |S(a)∩S(b)| ≥
-    //    t·n_a then S(b) must hit one of a's p = n_a − ⌈t·n_a⌉ + 1
-    //    first shingles in ANY fixed total order (missing all p leaves
-    //    at most n_a − p < t·n_a shared); rarest-first (df asc) makes
-    //    those prefix shingles the lowest-fan-out ones, so candidates
-    //    come from prefix(a) ⋈ postings(b) (Σ_s df_prefix(s)·df(s))
-    //    and only candidates get the exact verify walk. ⌈t·n_a⌉ is
-    //    exact basis-point integer arithmetic — a float ceil at an
-    //    integer boundary would silently shrink the prefix below the
-    //    lemma's bound and lose recall.
-    //
-    // Both return identical results (brute-force equivalence property
-    // test covers both paths).
-    val inter =
-      if (!prefixFilter) {
-        joinable.select(col("shingle"), col("doc_id").as("doc_a"))
-          .join(joinable.select(col("shingle"), col("doc_id").as("doc_b")),
-            Seq("shingle"))
-          .filter(col("doc_a") =!= col("doc_b"))
-          .groupBy(col("doc_a"), col("doc_b"))
-          .agg(count(lit(1)).as("n_common"))
-      } else {
-        val tBp = math.round(minContainment * 10000).toInt
-        val wDoc = Window.partitionBy(col("doc_id"))
-          .orderBy(col("__df").asc, col("shingle").asc)
-        val prefix = banded
-          .withColumn("__r", row_number().over(wDoc))
-          .join(sizes, "doc_id")
-          .filter(col("__r") <=
-            col("n_a") - expr(s"(n_a * $tBp + 9999) div 10000") + 1)
-          .select(col("shingle"), col("doc_id").as("doc_a"))
-        val cand = prefix
-          .join(joinable.select(col("shingle"), col("doc_id").as("doc_b")),
-            Seq("shingle"))
-          .filter(col("doc_a") =!= col("doc_b"))
-          .select(col("doc_a"), col("doc_b")).distinct()
-        cand
-          .join(joinable.select(col("doc_id").as("doc_a"), col("shingle")),
-            Seq("doc_a"))
-          .join(joinable.select(col("doc_id").as("doc_b"), col("shingle")),
-            Seq("doc_b", "shingle"))
-          .groupBy(col("doc_a"), col("doc_b"))
-          .agg(count(lit(1)).as("n_common"))
-      }
+    // Intersection counts from the straight postings self-join:
+    // Σ_s df(s)² candidate rows, bounded by the df band the caller
+    // applied (the quantile band's fan-out budget keeps it ≤
+    // ShingleDfFanoutBudget at ANY corpus by construction).
+    val inter = joinable.select(col("shingle"), col("doc_id").as("doc_a"))
+      .join(joinable.select(col("shingle"), col("doc_id").as("doc_b")),
+        Seq("shingle"))
+      .filter(col("doc_a") =!= col("doc_b"))
+      .groupBy(col("doc_a"), col("doc_b"))
+      .agg(count(lit(1)).as("n_common"))
     inter
       .join(sizes.select(col("doc_id").as("doc_a"), col("n_a")), "doc_a")
       .withColumn("containment",

@@ -199,22 +199,11 @@ object EventStream {
         .trigger(Trigger.AvailableNow())
         .start()
     } finally spark.conf.set(partConf, prev)
-    try {
-      q.processAllAvailable()
-      lastRunPeakStateRows = q.recentProgress
-        .map(p => p.stateOperators.map(_.numRowsTotal).sum)
-        .foldLeft(0L)(math.max)
-    } finally q.stop()
+    try q.processAllAvailable()
+    finally q.stop()
     try summarize(spark.table(name)).localCheckpoint(true)
     finally spark.catalog.dropTempView(name)
   }
-
-  /** Peak state-store rows observed by the MOST RECENT [[runToMemory]]
-    * run (max over micro-batch progress of Σ numRowsTotal across state
-    * operators) — harness observability for the state-store scale
-    * measurements (tools.StreamStoreBench → SCALE.md); consumed by no
-    * query. */
-  @volatile var lastRunPeakStateRows: Long = 0L
 
   /** Stream the document corpus through the STATELESS deterministic
     * mixture sampler ([[graft.operators.Sampling.deterministicMix]])

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Single-pass FAMILY bench: the honest build-inclusive cost of each
   * staged-artifact family — what the FIRST toucher pays once per
   * corpus before every later consumer reads the landed table for
@@ -46,15 +44,7 @@ object FamilyBench {
     }
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.rdd.compress", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build()
     // codegen warm-up (graft.Bench's rationale): one cold pass at the
     // smallest SF so family 1 doesn't absorb JVM startup
     val warmSf = "/root/testdata/sf0.001"

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Increment-cost FLATNESS measurement (round-13): does a fixed-size
@@ -24,15 +23,7 @@ object IncrementBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/repo/testdata-sf1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.rdd.compress", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build()
     val rates = Map("src1" -> 1.0, "src2" -> 1.0, "src3" -> 0.5,
       "src5" -> 0.8, "src7" -> 1.0, "src11" -> 0.25)
     val d = graft.engine.Sources.table(spark, sfDir, "documents")

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Builder-local job-level profiler: run one declared query and print
   * every Spark job it issued (start offset, duration, description) plus
@@ -16,18 +15,9 @@ object JobProbe {
     val dir = args(0)
     val name = args(1)
     val reps = if (args.length > 2) args(2).toInt else 2
-    val builder = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions).master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
     // ad-hoc conf experiments: GRAFT_PROBE_CONF="k=v;k2=v2"
-    sys.env.get("GRAFT_PROBE_CONF").foreach(_.split(";").map(_.trim)
-      .filter(_.nonEmpty).foreach { kv =>
-        require(kv.contains("="), s"bad GRAFT_PROBE_CONF segment (want k=v): '$kv'")
-        val Array(k, v) = kv.split("=", 2); builder.config(k, v)
-      })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build(
+      conf = graft.GraftSession.envConf("GRAFT_PROBE_CONF"))
     spark.range(1000000).selectExpr("sum(id)").collect()
     val fn = graft.SparkEntry.queries(name)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()

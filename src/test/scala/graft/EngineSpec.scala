@@ -7,17 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.engine._
 
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** Fixed at 4 cores whatever the box has, so plan-shape assertions
+    * see the same shuffle-partition count everywhere. */
+  val cpus = 4
+  lazy val spark: SparkSession = GraftSession.build(cpus)
 }
 
 /** Unit tests over tiny literal frames — the upgraded analog of the

@@ -277,7 +277,7 @@ class Round4OpsSpec extends AnyFunSuite {
 
   // ------------------------------------------------- containment
 
-  test("containmentPairs prefix filter loses no pairs vs brute force") {
+  test("containmentPairs loses no pairs vs brute force") {
     // random token soups with heavy overlap so containment pairs exist
     // at several thresholds; brute force = definition over 3-shingles
     val rnd = new scala.util.Random(11)
@@ -290,7 +290,7 @@ class Round4OpsSpec extends AnyFunSuite {
     def shingles(t: String): Set[String] =
       t.split(" ").sliding(3).filter(_.length == 3).map(_.mkString(" ")).toSet
     val sets = texts.map { case (id, t) => id -> shingles(t) }.toMap
-    for (t <- Seq(0.5, 0.8, 1.0); prefixed <- Seq(false, true)) {
+    for (t <- Seq(0.5, 0.8, 1.0)) {
       val brute = (for {
         (a, sa) <- sets.toSeq; (b, sb) <- sets.toSeq
         if a != b && sa.nonEmpty
@@ -298,10 +298,10 @@ class Round4OpsSpec extends AnyFunSuite {
         if common.toDouble / sa.size >= t
       } yield (a, b)).toSet
       val got = graft.operators.NearDup.containmentPairs(docs, t,
-          maxShingleDf = 1000, prefixFilter = prefixed)
+          maxShingleDf = 1000)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got === brute,
-        s"threshold $t prefix=$prefixed: missing=${brute -- got} extra=${got -- brute}")
+        s"threshold $t: missing=${brute -- got} extra=${got -- brute}")
     }
   }
 
